@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cumulus_etl_spark.nlp import extract_note_text
+from cumulus_etl_spark.nlp.selection import select_notes
 from cumulus_etl_spark.operators.sampling import reservoir_sample
 from cumulus_etl_spark.sources import scan_resources
 
@@ -40,36 +41,21 @@ def sample_notes(
     surface the reference shares across its note CLIs
     (nlp.add_note_selection) applies BEFORE the draw, so the sample is
     uniform over the selected population."""
-    if select_by_csv and select_by_anon_csv:
-        raise ValueError(
-            "Multiple selection arguments provided. Please specify just one."
-        )
     docs = scan_resources(spark, input_dir, list(resource_types))
     docs = docs.dropDuplicates(["resourceType", "id"])
     notes = extract_note_text(docs).filter(F.col("note_text").isNotNull())
-    if select_by_csv or select_by_anon_csv:
-        from cumulus_etl_spark.nlp.selection import filter_by_note_csv
 
-        if select_by_csv:
-            notes = filter_by_note_csv(spark, notes, select_by_csv)
-        else:
-            if not phi_dir:
-                raise ValueError("--select-by-anon-csv requires the PHI dir")
-            from cumulus_etl_spark.deid import Codebook
+    def anon_salt() -> str:
+        if not phi_dir:
+            raise ValueError("--select-by-anon-csv requires the PHI dir")
+        from cumulus_etl_spark.deid import Codebook
 
-            notes = filter_by_note_csv(
-                spark, notes, select_by_anon_csv,
-                is_anon=True, salt=Codebook(phi_dir).salt,
-            )
-    if select_words:
-        from cumulus_etl_spark.nlp.selection import filter_by_words
+        return Codebook(phi_dir).salt
 
-        words = [w.strip() for a in select_words for w in a.split(",") if w.strip()]
-        notes = filter_by_words(notes, words)
-    if select_regex:
-        from cumulus_etl_spark.nlp.selection import filter_by_regex
-
-        notes = filter_by_regex(notes, select_regex)
+    notes = select_notes(
+        spark, notes, by_csv=select_by_csv, by_anon_csv=select_by_anon_csv,
+        words=select_words, regex=select_regex, anon_salt=anon_salt,
+    )
     return reservoir_sample(notes, n, seed=seed, tiebreak=["id"])
 
 

@@ -7,6 +7,7 @@ filters become broadcast semi- or anti-joins. All Catalyst.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -117,6 +118,46 @@ def filter_by_note_table(
         notes, spark.table(table_name), source=table_name, id_col=id_col,
         resource_type=resource_type, is_anon=True, salt=salt,
     )
+
+
+def select_notes(
+    spark,
+    notes: DataFrame,
+    *,
+    by_csv: str | None = None,
+    by_anon_csv: str | None = None,
+    by_athena_table: str | None = None,
+    words: list[str] | None = None,
+    regex: str | None = None,
+    anon_salt: Callable[[], str] | None = None,
+) -> DataFrame:
+    """The note-selection surface the note verbs share (ref
+    nlp.add_note_selection): at most one cohort source — ``by_csv``,
+    ``by_anon_csv`` or ``by_athena_table`` — then ``words`` (whole-word,
+    each flag value may hold a comma-separated list), then ``regex``.
+    ``anon_salt`` returns the codebook salt; it is called only when an
+    anon source (anon CSV or catalog table) is used. The word and regex
+    filters need a ``note_text`` column."""
+    if sum(map(bool, (by_csv, by_anon_csv, by_athena_table))) > 1:
+        raise ValueError(
+            "Multiple selection arguments provided. Please specify just one."
+        )
+    if by_csv:
+        notes = filter_by_note_csv(spark, notes, by_csv)
+    elif by_anon_csv:
+        notes = filter_by_note_csv(
+            spark, notes, by_anon_csv, is_anon=True, salt=anon_salt()
+        )
+    elif by_athena_table:
+        notes = filter_by_note_table(spark, notes, by_athena_table, salt=anon_salt())
+    if words:
+        # ref: words may repeat the flag or come comma-separated
+        notes = filter_by_words(
+            notes, [w.strip() for arg in words for w in arg.split(",") if w.strip()]
+        )
+    if regex:
+        notes = filter_by_regex(notes, regex)
+    return notes
 
 
 def filter_by_cohort_frame(

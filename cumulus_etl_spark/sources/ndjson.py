@@ -147,12 +147,6 @@ def scan_with_quarantine(
     return good, bad
 
 
-def scan_one(spark: SparkSession, root: str, resource_type: str) -> DataFrame:
-    """Single-resource-type scan under its exact contractual schema."""
-    # per-type parsing means a single-type scan IS the exact schema
-    return scan_resources(spark, root, [resource_type])
-
-
 def detect_resources(spark: SparkSession, root: str) -> set[str]:
     """S2: which resource types are present under ``root``?
 

@@ -496,29 +496,10 @@ class StreamingDriftMonitor:
         """The ``drift --columns`` verb's per-column summary — PSI, KS,
         JS, totals — quoted from ONE collected grid (|columns| ×
         |buckets| rows, the bounded-collect discipline), through the
-        same driver-side twin the batch verb uses."""
-        from cumulus_etl_spark.operators.drift import ks_js_from_rows
+        same builder the batch verb uses."""
+        from cumulus_etl_spark.operators.drift import multi_drift_summary
 
-        per = self.report(min_pct).collect()
-        out: dict = {"columns": {}}
-        for c in self.value_cols:
-            rows_c = [r for r in per if r["column"] == c]
-            psi = round(sum(r["psi_contrib"] for r in rows_c), 6)
-            ks, js = ks_js_from_rows(rows_c)
-            out["columns"][c] = {
-                "psi": psi,
-                "verdict": ("stable" if psi < 0.1
-                            else "moderate" if psi <= 0.25 else "action"),
-                "ks_stat": ks,
-                "js_divergence": js,
-                "n_expected": sum(r["n_expected"] for r in rows_c),
-                "n_actual": sum(r["n_actual"] for r in rows_c),
-            }
-        worst = max((v["psi"] for v in out["columns"].values()), default=0.0)
-        out["worst_psi"] = worst
-        out["verdict"] = ("stable" if worst < 0.1
-                          else "moderate" if worst <= 0.25 else "action")
-        return out
+        return multi_drift_summary(self.report(min_pct).collect(), self.value_cols)
 
 
 def streaming_drift_multi(
@@ -783,17 +764,20 @@ class StreamingCategoricalMonitor:
     def report_dict(self, min_pct: float = 1e-6) -> dict:
         """PSI + chi-square + Cramér's V from ONE collected
         ≤ (top_k + 1)-row report — the batch verb's quote, incremental."""
-        from cumulus_etl_spark.operators.drift import chi2_from_rows
+        from cumulus_etl_spark.operators.drift import (
+            chi2_from_rows,
+            psi_total,
+            psi_verdict,
+        )
 
         rows = self.report(min_pct).collect()
-        psi = round(sum(r["psi_contrib"] for r in rows), 6)
+        psi = psi_total(rows)
         chi2, v = chi2_from_rows(rows)
         return {
             "column": self.category_col,
             "mode": "categorical",
             "psi": psi,
-            "verdict": ("stable" if psi < 0.1
-                        else "moderate" if psi <= 0.25 else "action"),
+            "verdict": psi_verdict(psi),
             "chi2": chi2,
             "cramers_v": v,
             "n_expected": sum(r["n_expected"] for r in rows),

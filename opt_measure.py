@@ -8,11 +8,10 @@ Usage:
   python opt_measure.py --time q1_pricing_summary text_dedup_clusters
   python opt_measure.py --explain plans/r13 --suffix before q1_pricing_summary
   python opt_measure.py --time --runs 3 --sf /root/testdata/sf0.1 NAME...
-  python opt_measure.py --jobs NAME        # per-job wall breakdown via listener
 
-Timing methodology matches bench.py EXACTLY (materialize(): xxhash64 over
-every column + count/sum agg — forces every column like the noop sink,
-guide §1.4) so numbers here are comparable to BENCH_r*.json entries.
+Timing uses bench.py's own materialize() (xxhash64 over every column +
+count/sum agg — forces every column like the noop sink, guide §1.4), so
+numbers here are comparable to BENCH_r*.json entries.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ import json
 import os
 import time
 
+from bench import materialize
 from cumulus_etl_spark.plans import CATALOG
 from cumulus_etl_spark.plans.catalog import BENCH_RIGS
 from cumulus_etl_spark.session import get_spark
@@ -33,15 +33,6 @@ def all_queries():
     qs = dict(CATALOG)
     qs.update(BENCH_RIGS)
     return qs
-
-
-def materialize(df) -> int:
-    from pyspark.sql import functions as F
-
-    agg = df.select(F.xxhash64(*df.columns).alias("h")).agg(
-        F.count("h").alias("n"), F.sum(F.col("h").cast("decimal(38,0)")).alias("s")
-    )
-    return int(agg.collect()[0]["n"])
 
 
 def main() -> None:

@@ -238,7 +238,7 @@ def test_job_context_recorded(spark, dirs):
 
 
 def test_merge_clustering_prunes_key_lookups(spark, tmp_path):
-    """cluster_on_keys range-partitions version files by key; a point
+    """The merge sink sorts version files by key; a point
     lookup pushes its predicate to the parquet scan."""
     from pyspark.sql import functions as F
 
