@@ -1620,6 +1620,9 @@ def _run_stats(spark, args) -> int:
     for name in _managed_tables(args):
         tbl = ManagedTable(spark, args.output_dir, name)
         df = tbl.read()
+        rows = tbl.row_count()
+        if rows is None:  # pointer predates the stored row count
+            rows = df.count() if df is not None else 0
         tdir = os.path.join(args.output_dir, name)
         nbytes = sum(
             os.path.getsize(os.path.join(r, f))
@@ -1627,7 +1630,7 @@ def _run_stats(spark, args) -> int:
             for f in fs
         )
         report[name] = {
-            "rows": df.count() if df is not None else 0,
+            "rows": rows,
             "columns": len(df.schema.fields) if df is not None else 0,
             "current_version": tbl.current_version(),
             "versions": len(tbl.versions()),

@@ -139,17 +139,16 @@ def _run_task(
     # Tombstones from the bulk export's deleted/ bundles (J6), applied
     # post-merge with anonymized ids. Kept as a DataFrame — deletes flow
     # through an anti-join, never a driver-side id list (bulk deletes at
-    # scale would bottleneck on collect).
+    # scale would bottleneck on collect). An empty set commits nothing.
     dead = deleted.filter(F.col("resource_type") == task.resource_type)
     dead_anon = dead.select(codebook.anonymize(dead, "id").alias("id"))
-    have_dead = not dead_anon.isEmpty()
 
     if output_format == "ndjson":
         from cumulus_etl_spark.sinks.batched import write_ndjson_batches
 
         # The .meta sidecar is a small JSON document, so the ndjson path
         # is the one place the tombstone set legitimately materializes.
-        dead_ids = [r["id"] for r in dead_anon.collect()] if have_dead else None
+        dead_ids = [r["id"] for r in dead_anon.collect()] or None
         write_ndjson_batches(
             scrubbed,
             os.path.join(output_dir, task.table_name),
@@ -160,8 +159,7 @@ def _run_task(
     else:
         table = ManagedTable(spark, output_dir, task.table_name)
         table.merge(scrubbed, task.policy)
-        if have_dead:
-            table.delete_ids(dead_anon)
+        table.delete_ids(dead_anon)
         encounters_for_completion = (
             table.read() if task.resource_type == "Encounter" else None
         )

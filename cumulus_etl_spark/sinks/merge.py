@@ -30,7 +30,7 @@ the fallback is a *bucket-pruned versioned-parquet* table:
   NOT table size; this is the fallback's answer to Delta file pruning.
   On an object store without cheap links you'd run the Delta branch;
   the merge COMPUTE is bucket-pruned either way.
-- The ``_CURRENT`` pointer (version + schema + num_buckets) flips
+- The ``_CURRENT`` pointer (version + schema + num_buckets + rows) flips
   atomically at the end, so readers never see a half-written table and
   a crashed merge is invisible. ``finalize()`` drops superseded version
   dirs (vacuum analog; hardlinked files survive via the live version).
@@ -41,8 +41,17 @@ completion keys embed group_name). A migrating key would strand its old
 row in the old group's bucket, exactly as Delta's group-scoped
 ``whenNotMatchedBySourceDelete`` would.
 
-Scaling num_buckets: size so a bucket ≈ one comfortable task
-(64 locally; ~4096 at 100 TB keeps buckets ~25 GB before compression).
+Scaling num_buckets: a bucket is one file per version, written by one
+task, and every file carries the table's full footer (a scrubbed FHIR
+resource has thousands of leaf columns). So the bucket count follows the
+rows the table holds. Under a policy without an explicit
+``num_buckets``, the bootstrap picks the smallest power of two N with
+rows ≤ N × ``ROWS_PER_BUCKET``, capped at ``MAX_BUCKETS`` (~25 GB
+buckets at 100 TB, before compression). Once a merge could take the
+table past 2 × ``ROWS_PER_BUCKET`` × N rows, it re-sizes N the same way
+through a relayout; powers of two make that a bucket split. The row
+count lives in the pointer, kept exact by ``Observation``s that ride the
+write job itself. An explicit ``num_buckets`` pins the layout.
 """
 
 from __future__ import annotations
@@ -52,7 +61,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -66,11 +75,40 @@ except ImportError:
 
 CURRENT_POINTER = "_CURRENT"
 BUCKET_COL = "__bucket"
+# Rows per bucket for self-sized layouts: the reference's write batch
+# (~100k rows per pyarrow Table handed to the Delta writer).
+ROWS_PER_BUCKET = 100_000
+MAX_BUCKETS = 4096
 
 
 def _bucket_expr(cols: tuple[str, ...], num_buckets: int) -> Column:
     """Deterministic bucket id for a row: pmod(xxhash64(cols), n)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_buckets)).cast("int")
+
+
+def _buckets_for(rows: int) -> int:
+    """Smallest power of two N with rows ≤ N × ROWS_PER_BUCKET, capped at
+    MAX_BUCKETS. Powers of two make growth a split: when N divides M,
+    pmod(h, M) mod N == pmod(h, N), so each new bucket draws its rows
+    from exactly one old bucket."""
+    n = 1
+    while n < MAX_BUCKETS and rows > n * ROWS_PER_BUCKET:
+        n *= 2
+    return n
+
+
+def _bucket_counts(df: DataFrame, cols: tuple[str, ...], num_buckets: int) -> dict[int, int]:
+    """Rows per bucket of ``df`` — one small aggregate job, ≤ num_buckets
+    ints on the driver. Its keys are the buckets a batch touches."""
+    b = _bucket_expr(cols, num_buckets).alias("b")
+    return {r[0]: r[1] for r in df.groupBy(b).count().collect()}
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its row count, filled in by whichever
+    action first runs ``df`` — counted in that action's own job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -113,9 +151,10 @@ class MergePolicy:
     # dotted path of the ISO-string timestamp used as the freshness guard;
     # None disables the guard (always update on match)
     last_updated_field: str | None = "meta.lastUpdated"
-    # hive-partition count for bucket-pruned merges; size so one bucket is
-    # one comfortable task (64 locally, ~4096 at 100 TB)
-    num_buckets: int = 64
+    # hive-partition count for bucket-pruned merges. None: the sink sizes
+    # it from the rows the table holds (module docstring); an int pins
+    # that exact layout.
+    num_buckets: int | None = None
     # multi-column file clustering: interleave the bits of these numeric
     # columns (Z-order / Morton, the strategy behind Delta OPTIMIZE
     # ZORDER) so min/max footers prune on ALL of them, not just the
@@ -155,6 +194,13 @@ class ManagedTable:
     def current_version(self) -> int | None:
         ptr = self._pointer()
         return None if ptr is None else int(ptr["version"])
+
+    def row_count(self) -> int | None:
+        """Rows in the current version, from the pointer (no job). None
+        when unknown: no table, a Delta table, or a pointer written
+        before the pointer carried ``rows``."""
+        ptr = self._pointer()
+        return None if ptr is None or "rows" not in ptr else int(ptr["rows"])
 
     def schema(self) -> StructType | None:
         """The table's contractual schema (stored in the pointer so empty
@@ -276,12 +322,15 @@ class ManagedTable:
         ptr = self._pointer()
         fuse_bucket = policy.bucket_cols == tuple(policy.keys)
         if ptr is None:
+            # Self-sized bootstrap: the batch's row count (an upper bound
+            # on the deduped table) picks the layout — its one extra job.
+            n = policy.num_buckets or _buckets_for(updates.count())
             if fuse_bucket:
                 # Bootstrap, bucket = f(keys): route to the output bucket
                 # first and dedupe on that same exchange — ONE shuffle
                 # where dedupe-then-write was two.
                 bucketed = updates.withColumn(
-                    BUCKET_COL, _bucket_expr(policy.bucket_cols, policy.num_buckets)
+                    BUCKET_COL, _bucket_expr(policy.bucket_cols, n)
                 ).repartition(F.col(BUCKET_COL))
                 w0 = Window.partitionBy(BUCKET_COL, *policy.keys).orderBy(
                     *_dedupe_order(updates, policy)
@@ -302,7 +351,7 @@ class ManagedTable:
                         ),
                     )
                 self._write_version(
-                    deduped, policy, touched=None, prev=None, pre_bucketed=True
+                    deduped, policy, n, touched=None, prev=None, pre_bucketed=True
                 )
             else:
                 deduped = _dedupe_updates(updates, policy)
@@ -310,28 +359,29 @@ class ManagedTable:
                     self._write_changes(
                         1, deduped.withColumn("_change_type", F.lit("insert"))
                     )
-                self._write_version(deduped, policy, touched=None, prev=None)
+                self._write_version(deduped, policy, n, touched=None, prev=None)
             self._publish_changes(1)
             return
+        n = policy.num_buckets or int(ptr.get("num_buckets") or 1)
         relayout = tuple(ptr.get("bucket_cols") or ()) != policy.bucket_cols or int(
             ptr.get("num_buckets") or 0
-        ) != policy.num_buckets
-        if relayout:
-            # bucketing layout changed: merge against the whole table once
-            # and rewrite every bucket under the new layout
-            touched = None
-        else:
-            # Bucket pruning: only the batch's buckets are read, shuffled,
-            # and rewritten; the rest of the table is re-linked untouched.
-            touched = sorted(
-                r[0]
-                for r in updates.select(
-                    _bucket_expr(policy.bucket_cols, policy.num_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-        existing = self._read_version(ptr, buckets=touched)
+        ) != n
+        counts: dict[int, int] = {}
+        if not relayout or policy.num_buckets is None:
+            counts = _bucket_counts(updates, policy.bucket_cols, n)
+        if policy.num_buckets is None and "rows" in ptr:
+            # Growth: the table holds at most rows + batch rows after this
+            # merge. Past 2 × ROWS_PER_BUCKET per bucket, re-size through
+            # the relayout below (pointers without rows keep their layout).
+            upper = int(ptr["rows"]) + sum(counts.values())
+            if upper > 2 * ROWS_PER_BUCKET * n:
+                n, relayout = max(n, _buckets_for(upper)), True
+        # Relayout (bucketing layout changed): merge against the whole
+        # table once and rewrite every bucket under the new layout. Else
+        # bucket pruning: only the batch's buckets are read, shuffled, and
+        # rewritten; the rest of the table is re-linked untouched.
+        touched = None if relayout else sorted(counts)
+        existing, replaced = _observe_rows(self._read_version(ptr, buckets=touched))
 
         keys = list(policy.keys)
         ex = existing.withColumn("__src", F.lit(0))
@@ -353,7 +403,7 @@ class ManagedTable:
         # write shuffle on bucket = two full-data exchanges.
         if fuse_bucket:
             allr = allr.withColumn(
-                BUCKET_COL, _bucket_expr(policy.bucket_cols, policy.num_buckets)
+                BUCKET_COL, _bucket_expr(policy.bucket_cols, n)
             ).repartition(F.col(BUCKET_COL))
             w = Window.partitionBy(BUCKET_COL, *keys)
         else:
@@ -454,7 +504,8 @@ class ManagedTable:
             # _publish_pending_changes).
             self._write_changes(next_v, changes)
         self._write_version(
-            out, policy, touched=touched, prev=ptr, pre_bucketed=fuse_bucket
+            out, policy, n, touched=touched, prev=ptr, replaced=replaced,
+            pre_bucketed=fuse_bucket,
         )
         self._publish_changes(next_v)
 
@@ -494,16 +545,10 @@ class ManagedTable:
 
         bucket_cols = tuple(ptr.get("bucket_cols") or (id_col,))
         num_buckets = int(ptr.get("num_buckets") or 1)
-        touched: list[int] | None = None
-        if bucket_cols == (id_col,):
-            touched = sorted(
-                r[0]
-                for r in ids.select(
-                    _bucket_expr(("__del_id",), num_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+        counts = _bucket_counts(ids, ("__del_id",), num_buckets)
+        if not counts:
+            return  # no ids: nothing to delete, no new version
+        touched = sorted(counts) if bucket_cols == (id_col,) else None
         if change_feed is None:
             # Inherit from the table: a feed-maintained table must never
             # commit a silent hole that CDF consumers would skip forever.
@@ -516,7 +561,9 @@ class ManagedTable:
         # from scan packing; the writer's per-partition-value file split
         # handles that, and the leading BUCKET_COL sort keeps one file
         # per bucket per task.)
-        existing = self._read_version(ptr, buckets=touched, keep_bucket_col=True)
+        existing, replaced = _observe_rows(
+            self._read_version(ptr, buckets=touched, keep_bucket_col=True)
+        )
         remaining = existing.join(
             F.broadcast(ids), existing[id_col] == F.col("__del_id"), "left_anti"
         )
@@ -528,8 +575,8 @@ class ManagedTable:
             self._write_changes(next_v, deleted.withColumn("_change_type", F.lit("delete")))
         self._write_raw(
             remaining, bucket_cols, num_buckets, sort_cols=bucket_cols,
-            touched=touched, prev=ptr, change_feed=change_feed,
-            pre_bucketed=True,
+            touched=touched, prev=ptr, replaced=replaced,
+            change_feed=change_feed, pre_bucketed=True,
         )
         self._publish_changes(next_v)
 
@@ -636,16 +683,18 @@ class ManagedTable:
         self,
         df: DataFrame,
         policy: MergePolicy,
+        num_buckets: int,
         touched: list[int] | None,
         prev: dict | None,
+        replaced: Observation | None = None,
         pre_bucketed: bool = False,
     ) -> int:
         # files sort by key so parquet min/max footers prune key lookups —
         # the fallback's analog of Delta liquid clustering
         # (clusterBy(uniqueness_fields), ref deltalake.py:103-106)
         return self._write_raw(
-            df, policy.bucket_cols, policy.num_buckets,
-            sort_cols=policy.keys, touched=touched, prev=prev,
+            df, policy.bucket_cols, num_buckets,
+            sort_cols=policy.keys, touched=touched, prev=prev, replaced=replaced,
             zorder_cols=policy.zorder_cols, change_feed=policy.change_feed,
             pre_bucketed=pre_bucketed,
         )
@@ -658,6 +707,7 @@ class ManagedTable:
         sort_cols: tuple[str, ...],
         touched: list[int] | None,
         prev: dict | None,
+        replaced: Observation | None = None,
         zorder_cols: tuple[str, ...] | None = None,
         change_feed: bool = False,
         pre_bucketed: bool = False,
@@ -670,7 +720,13 @@ class ManagedTable:
 
         ``pre_bucketed``: the caller already attached BUCKET_COL and
         hash-partitioned the frame on it (merge fuses that exchange with
-        its window — r13 opt), so the routing shuffle is skipped here."""
+        its window — r13 opt), so the routing shuffle is skipped here.
+
+        ``replaced``: row-count Observation over the previous version's
+        ``touched`` buckets as read into ``df``'s plan. The pointer's
+        ``rows`` is then previous rows − replaced + written, all counted
+        by this write job; with ``touched=None`` it is just the rows
+        written."""
         v = (self.current_version() or 0) + 1
         out = self._vdir(v)
         if pre_bucketed:
@@ -683,6 +739,7 @@ class ManagedTable:
             bucketed = df.withColumn(
                 BUCKET_COL, _bucket_expr(bucket_cols, num_buckets)
             ).repartition(F.col(BUCKET_COL))
+        bucketed, written = _observe_rows(bucketed)
         if zorder_cols:
             from cumulus_etl_spark.operators.zorder import zorder_key
 
@@ -696,12 +753,17 @@ class ManagedTable:
             .partitionBy(BUCKET_COL)
             .parquet(out)
         )
+        rows = written.get["rows"]
         if touched is not None and prev is not None:
             prev_dir = self._vdir(int(prev["version"]))
             keep = {f"{BUCKET_COL}={t}" for t in touched}
             for entry in self._bucket_dirs(prev_dir):
                 if entry not in keep:
                     _link_tree(os.path.join(prev_dir, entry), os.path.join(out, entry))
+            rows = (
+                int(prev["rows"]) - replaced.get["rows"] + rows
+                if "rows" in prev else None
+            )
         ptr = os.path.join(self.path, CURRENT_POINTER)
         tmp = ptr + ".tmp"
         with open(tmp, "w") as fh:
@@ -712,6 +774,7 @@ class ManagedTable:
                     "bucket_cols": list(bucket_cols),
                     "num_buckets": num_buckets,
                     "change_feed": change_feed,
+                    **({} if rows is None else {"rows": rows}),
                 },
                 fh,
             )

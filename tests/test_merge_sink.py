@@ -380,6 +380,47 @@ def test_bucket_relayout_on_policy_change(spark, tmp_path):
         assert json.load(fh)["num_buckets"] == 16
 
 
+def test_default_policy_sizes_buckets_from_rows(spark, tmp_path):
+    """Without an explicit num_buckets the layout follows the rows: 1,000
+    rows fit one bucket (one file per version), and the pointer carries
+    the exact row count."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    df = spark.createDataFrame([(f"k{i}", "x") for i in range(1000)], "id string, val string")
+    tbl.merge(df, MergePolicy(last_updated_field=None))
+    v1 = os.path.join(tbl.path, "v1")
+    assert [d for d in os.listdir(v1) if d.startswith("__bucket=")] == ["__bucket=0"]
+    ptr = tbl._pointer()
+    assert ptr["num_buckets"] == 1 and ptr["rows"] == 1000
+    assert tbl.row_count() == 1000
+
+
+def test_pointer_without_rows_keeps_its_layout(spark, tmp_path, monkeypatch):
+    """A pointer written before it carried ``rows`` cannot tell the
+    table's size: merges keep its bucket count instead of growing it."""
+    monkeypatch.setattr(merge_mod, "ROWS_PER_BUCKET", 1)
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    pol = MergePolicy(last_updated_field=None)
+    tbl.merge(spark.createDataFrame([("k0", "x")], "id string, val string"), pol)
+    ptr = tbl._pointer()
+    assert ptr["num_buckets"] == 1
+    del ptr["rows"]
+    with open(os.path.join(tbl.path, "_CURRENT"), "w") as fh:
+        json.dump(ptr, fh)
+    tbl.merge(spark.createDataFrame([(f"k{i}", "y") for i in range(10)], "id string, val string"), pol)
+    ptr = tbl._pointer()
+    assert ptr["num_buckets"] == 1 and "rows" not in ptr
+    assert tbl.row_count() is None and tbl.read().count() == 10
+
+
+def test_delete_ids_empty_commits_nothing(spark, tmp_path):
+    """An id set that touches no bucket returns without a new version."""
+    tbl = ManagedTable(spark, str(tmp_path), "t")
+    tbl.merge(make_df(spark, [("a", "1", None), ("b", "1", None)]), MergePolicy())
+    tbl.delete_ids(spark.createDataFrame([], "id string"))
+    assert tbl.current_version() == 1 and tbl.versions() == [1]
+    assert set(rows_of(tbl)) == {"a", "b"}
+
+
 def test_dedupe_last_wins_explicit_order(spark):
     df = spark.createDataFrame(
         [("a", "first", 1), ("a", "last", 2), ("b", "only", 1)],

@@ -13,9 +13,11 @@ from __future__ import annotations
 import random
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import cumulus_etl_spark.sinks.merge as merge_mod
 from cumulus_etl_spark.deid.philter import scrub_text
 from cumulus_etl_spark.nlp.span import anchor_span
 from cumulus_etl_spark.sinks import ManagedTable, MergePolicy
@@ -125,18 +127,37 @@ def _model_merge(model: dict, batch: list[tuple], policy: MergePolicy) -> None:
                 model[rid] = (val, ts)
 
 
-def test_merge_random_ops_match_model(spark, tmp_path):
+def _check_pointer(tbl, layouts: list[int]) -> None:
+    """The pointer's row count is exact, and its bucket count only ever
+    grows, by powers of two."""
+    ptr = tbl._pointer()
+    assert ptr["rows"] == tbl.read().count()
+    n = ptr["num_buckets"]
+    assert n & (n - 1) == 0  # a power of two
+    assert not layouts or n >= layouts[-1]
+    layouts.append(n)
+
+
+@pytest.mark.parametrize("rows_per_bucket", [None, 2], ids=["default", "growth"])
+def test_merge_random_ops_match_model(spark, tmp_path, monkeypatch, rows_per_bucket):
+    """``growth`` shrinks the sizing constant and grows the batches, so
+    the table outgrows its bucket layout twice (1 → 4 → 16 buckets), and
+    interleaves id deletes."""
+    growth = rows_per_bucket is not None
+    if growth:
+        monkeypatch.setattr(merge_mod, "ROWS_PER_BUCKET", rows_per_bucket)
     rng = random.Random(1234)
-    ids = [f"id{i}" for i in range(8)]
+    ids = [f"id{i}" for i in range(64 if growth else 8)]
     dates = [None] + [f"2021-0{m}-01T00:00:00Z" for m in range(1, 8)]
     policy = MergePolicy()
     tbl = ManagedTable(spark, str(tmp_path), "model_test")
     model: dict[str, tuple] = {}
+    layouts: list[int] = []
 
-    for step in range(6):
+    for step in range(8 if growth else 6):
         batch = [
             (rng.choice(ids), f"v{step}-{k}", rng.choice(dates))
-            for k in range(rng.randint(1, 6))
+            for k in range(rng.randint(1, 2 + 4 * step if growth else 6))
         ]
         # same (id, ts) with different payloads has no defined winner in a
         # distributed batch (no file order) — don't generate those; the
@@ -155,6 +176,16 @@ def test_merge_random_ops_match_model(spark, tmp_path):
             for r in tbl.read().collect()
         }
         assert got == model, f"divergence at step {step}"
+        _check_pointer(tbl, layouts)
+        if growth:
+            dead = rng.sample(sorted(model), min(len(model), rng.randint(0, 2)))
+            tbl.delete_ids(spark.createDataFrame([(d,) for d in dead], "id string"))
+            for d in dead:
+                del model[d]
+            assert {r["id"] for r in tbl.read().collect()} == set(model)
+            _check_pointer(tbl, layouts)
+    if growth:
+        assert sorted(set(layouts)) == [1, 4, 16], layouts
 
 
 def test_merge_equal_ts_duplicate_is_deterministic(spark, tmp_path):
